@@ -41,6 +41,16 @@ import java.lang.ref.WeakReference
   * objects. Like any DataFrame temp view, the source view snapshots the
   * `events` file listing when it is registered; dropping `test_table`
   * makes the next call register again and list the files afresh.
+  *
+  * The final sort runs in one task, as BigQuery (Dremel, VLDB 2020)
+  * finishes an outermost ORDER BY on a single worker: the result is one
+  * user's rows, a few dozen, so a parallel range sort would spend more on
+  * its sampling job and shuffle than on sorting. [[datamart]] reads the
+  * TVF's rows into one partition with `COALESCE(1)`, which satisfies the
+  * global sort's distribution without a shuffle, so a lookup runs as one
+  * Spark job: no range exchange, no sampling job, no AQE query stage. The
+  * scan then runs in that one task too; the `events` source is a single
+  * file, and the pushed-down `id` filter leaves it little to read.
   */
 object ReferencePipeline {
 
@@ -141,12 +151,13 @@ object ReferencePipeline {
 
   /** The datamart query (reference models/datamart/test_datamart.sql:1-5)
     * with the TVF argument bound as a named parameter, never spliced into
-    * the SQL text.
+    * the SQL text. `COALESCE(1)` puts the final sort in one task (see the
+    * object's scaladoc).
     */
   def datamart(spark: SparkSession, sfDir: String, id: String = "13"): DataFrame = {
     register(spark, sfDir)
     spark.sql(
-      """SELECT column1, datetime
+      """SELECT /*+ COALESCE(1) */ column1, datetime
         |FROM test_table_function(:filter_id)
         |ORDER BY column1""".stripMargin,
       Map("filter_id" -> id)

@@ -1,6 +1,7 @@
 package graft.udf
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 
 import java.util.concurrent.Executors
 import scala.concurrent.duration.Duration
@@ -106,8 +107,11 @@ final class ModelRunner(models: Seq[Model]) {
                 df.createOrReplaceTempView(m.name)
               case Materialization.Table =>
                 withColumnComments(df, m.docs).write.mode("overwrite").saveAsTable(m.name)
+                // the description is bound, never spliced: a spliced `\n`
+                // or trailing `\` would be read as an escape or break the
+                // statement after the table is already written
                 m.docs.description.foreach { d =>
-                  spark.sql(s"COMMENT ON TABLE ${m.name} IS '${d.replace("'", "''")}'")
+                  spark.sql(s"COMMENT ON TABLE ${quoted(m.name)} IS :d", Map("d" -> d))
                 }
             }
             m.name -> df
@@ -150,6 +154,11 @@ final class ModelRunner(models: Seq[Model]) {
     changed.toSeq.foreach(spread)
     m => changed.contains(m.name)
   }
+
+  /** `name` as `saveAsTable` parses it, each part backtick-quoted. */
+  private def quoted(name: String): String =
+    CatalystSqlParser.parseMultipartIdentifier(name)
+      .map(p => "`" + p.replace("`", "``") + "`").mkString(".")
 
   /** Attach column comments to the schema before `saveAsTable` so
     * `DESCRIBE` shows them (the Spark form of dbt's `persist_docs:

@@ -87,6 +87,24 @@ class ModelRunnerSpec extends SparkTestBase {
     spark.sql("DROP TABLE mr_doc_tbl")
   }
 
+  test("persist_docs: a table description reads back unchanged, whatever characters it holds") {
+    val descriptions = Seq(
+      "quote: it's 'here'",
+      "backslashes: C:\\new\\table",
+      "trailing backslash \\",
+      "non-ASCII: 測試用的 datamart 表 — café")
+    for ((d, i) <- descriptions.zipWithIndex) {
+      val name = s"mr_desc_$i"
+      new ModelRunner(Seq(
+        Model(name, Nil, _.range(1).toDF("n"), Materialization.Table, docs = ModelDocs(description = Some(d)))
+      )).run(spark)
+      val comment = spark.sql(s"DESCRIBE TABLE EXTENDED $name").collect()
+        .find(_.getString(0) == "Comment").map(_.getString(1))
+      assert(comment.contains(d), d)
+      spark.sql(s"DROP TABLE $name")
+    }
+  }
+
   test("selectChanged rebuilds changed models plus transitive dependents only") {
     def models(sigB: String) = Seq(
       Model("ch_a", Nil, _.range(1).toDF(), signature = "a-v1"),
